@@ -22,8 +22,8 @@ import lucy.stream.IncrementalIndexer
   *     compactions the index is additive (CompositeIndex docs: the doc
   *     is scored once, against its latest version's tf, but stale
   *     postings of terms dropped by the update may still match until
-  *     the merge) — `compact()` restores exactness (ADVICE r2;
-  *     LucyStoreSpec probes both regimes).
+  *     the merge) — `compact()` restores exactness (LucyStoreSpec
+  *     probes both regimes).
   *   - `compact()`    — fold deltas + deletes into a new base generation.
   *
   * A serving QueryEngine (block cache + stats cache) is rebuilt whenever
@@ -41,16 +41,15 @@ final class LucyStore(spark: SparkSession, rootDir: String,
     warmAsync()
   }
 
-  // DELTA relation warm cache (r6, VERDICT r5 next-round #6): a
-  // mutation invalidates the composite ENGINE, but the part directories
-  // underneath (base generation, completed deltas) are immutable — only
-  // compaction retires them. The r5 store soak paid for ignoring that:
-  // the first 5 live searches over base+deltas cost 11.1 s vs 3.5 s
-  // post-compaction, because every rebuilt engine re-planned every
-  // part's relations from disk. Here each DELTA's segments / term-stats
-  // / docmap relations are persisted ONCE per directory and survive
-  // engine invalidation; Spark's plan-based cache substitution
-  // (CacheManager matches any later scan of the same path) makes the
+  // DELTA relation warm cache: a mutation invalidates the composite
+  // ENGINE, but the part directories underneath (base generation,
+  // completed deltas) are immutable — only compaction retires them, so
+  // a rebuilt engine must not re-plan every part's relations from disk
+  // (measured: the first 5 live searches over base+deltas cost 11.1 s
+  // without this cache vs 3.5 s post-compaction). Each DELTA's
+  // segments / term-stats / docmap relations are persisted ONCE per
+  // directory and survive engine invalidation; Spark's plan-based cache
+  // substitution (CacheManager matches any later scan of the same path) makes the
   // rebuilt composite's unions hit the in-memory copies without
   // CompositeIndex knowing the cache exists. The BASE generation is
   // deliberately NOT pinned: at corpus scale the base cannot live in
@@ -68,12 +67,12 @@ final class LucyStore(spark: SparkSession, rootDir: String,
   // predicate below the Aggregate into every part's scan — the base's
   // term-SORTED stats parquet serves them as min/max-pruned range
   // probes and the delta scans hit the part caches above; each lookup
-  // is one delta-sized job. An earlier r6 draft persisted the full
-  // aggregation per view generation instead: that materialization is a
+  // is one delta-sized job. Persisting the full aggregation per view
+  // generation was tried and retired: that materialization is a
   // full-VOCABULARY shuffle paid per MUTATION on the warm-behind
   // thread, racing ingest — a non-starter at corpus-scale base
   // vocabulary — and the interleaved 1 M-doc A/B
-  // (store_ab_vs_*/store_ab_novs_*, BENCH/BASELINE.md round 6) showed
+  // (store_ab_vs_*/store_ab_novs_*, BENCH/BASELINE.md) showed
   // it buys nothing: steady-state warm live search identical
   // (2.37/2.50 s vs 2.32/2.38 s per 5 queries), zero-gap first search
   // identical, puts parity-to-better without it (best-of 19.3 s vs
@@ -111,11 +110,10 @@ final class LucyStore(spark: SparkSession, rootDir: String,
     }
   }
 
-  // Warm-BEHIND (r6, VERDICT r5 next-round #6): after every mutation the
-  // next engine's one-time costs — composite corpus stats, the new
-  // delta's relation caches — are
-  // paid on a background daemon thread, so the first post-mutation
-  // search finds a warm engine instead of paying them inline (lucy.js
+  // Warm-BEHIND: after every mutation the next engine's one-time costs —
+  // composite corpus stats, the new delta's relation caches — are paid
+  // on a background daemon thread, so the first post-mutation search
+  // finds a warm engine instead of paying them inline (lucy.js
   // updates its in-memory index ON put; this is the async cluster
   // analog). Purely a read-side warm: single-writer semantics are
   // untouched, and a search racing the warm simply shares the same
@@ -133,21 +131,23 @@ final class LucyStore(spark: SparkSession, rootDir: String,
           warmQueued.set(false) // before the work: a mutation mid-warm re-queues
           try {
             val e = engine
-            // Stale-warm bail (r7 wave 3): during a burst of puts, each
-            // put invalidates the engine the PREVIOUS put's warm is still
+            // Stale-warm bail: during a burst of puts, each put
+            // invalidates the engine the PREVIOUS put's warm is still
             // working on — finishing that stale warm (composite stats
             // probe + pruned plan probes for a view that no longer
             // serves) competes with the next put's own jobs for executor
             // slots under FIFO scheduling. A mutation that supersedes
-            // this view has already re-queued a warm (invalidate →
-            // warmAsync CAS), so bailing loses nothing: the queued warm
-            // redoes the work against the live view. Checked between
-            // steps, not mid-job — jobs themselves are delta-sized.
+            // this view will have re-queued a warm: invalidate() always
+            // follows `engineCache = None` with warmAsync(), and its CAS
+            // succeeds because this warm already reset warmQueued. So
+            // bailing loses nothing: the queued warm redoes the work
+            // against the live view. Checked between steps, not
+            // mid-job — jobs themselves are delta-sized.
             def current = engineCache.contains(e)
             // composite corpus stats, then the relation-level one-time
             // costs (file listing, parquet footers, union-plan analysis)
-            // via pruned no-data probes — r7, VERDICT r6 next-round #4:
-            // with the warm given think-time to finish, the first live
+            // via pruned no-data probes: with the warm given think-time
+            // to finish, the first live
             // search now costs the same as a steady one (measured 0.84 s
             // vs 0.75–0.86 s steady at 200k+5×10k). Deliberately
             // SEQUENTIAL: overlapping these jobs from a pool was tried
@@ -162,10 +162,10 @@ final class LucyStore(spark: SparkSession, rootDir: String,
             warmedParts.values.flatten.foreach(ds => if (current) ds.count())
           } catch {
             case ex if scala.util.control.NonFatal(ex) =>
-              // VERDICT r6 what's-wrong #1: a persistent warm failure
-              // must never be silent — every first search would degrade
-              // with no trace. The engine stays correct (searches build
-              // it lazily); this is purely a performance warning.
+              // A persistent warm failure must never be silent — every
+              // first search would degrade with no trace. The engine
+              // stays correct (searches build it lazily); this is purely
+              // a performance warning.
               log.warn(s"background warm failed for $rootDir — first " +
                 "post-mutation searches will pay the engine build inline", ex)
           }
@@ -174,7 +174,7 @@ final class LucyStore(spark: SparkSession, rootDir: String,
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Release everything this store pinned (ADVICE r6 #1): shuts down
+  /** Release everything this store pinned: shuts down
     * the warm executor and unpersists the delta relation caches. The
     * store remains usable afterwards (caches rebuild lazily; the warm
     * thread is simply gone), but the intended use is end-of-life for
@@ -223,8 +223,8 @@ final class LucyStore(spark: SparkSession, rootDir: String,
              k: Int = LucySpec.defaultK): DataFrame =
     engine.search(query, mode, k)
 
-  /** Search with urls attached (J4 join-back). */
+  /** Search with urls attached (J4 join-back against the engine's view). */
   def searchWithUrls(query: String, mode: QueryMode.Value = QueryMode.And,
                      k: Int = LucySpec.defaultK): DataFrame =
-    lucy.query.NaiveSearch.withUrls(search(query, mode, k), view.docmap(spark))
+    engine.searchWithUrls(query, mode, k)
 }

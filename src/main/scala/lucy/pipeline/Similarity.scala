@@ -35,7 +35,7 @@ object Similarity {
     * precomputing it per ROW and dividing dotCol by the product is
     * bit-identical to cosineCol per PAIR while doing a third of the
     * array work (the norms don't depend on the pair — recomputing both
-    * per pair was the r3 all-pairs dedup hot spot).
+    * per pair made the all-pairs dedup hot spot).
     */
   def normCol(v: Column): Column =
     sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
@@ -48,7 +48,7 @@ object Similarity {
     * cosineCol stays as the one-shot Column form (and the statement of
     * the oracle formula).
     *
-    * Array[Float], not Seq[Float] (r4): through the Seq interface every
+    * Array[Float], not Seq[Float]: through the Seq interface every
     * element access dispatches the GENERIC apply and boxes — measured
     * ~7× on corpus-wide passes. Spark converts array<float> to a
     * primitive Array[Float] without boxing.
@@ -73,16 +73,21 @@ object Similarity {
     math.sqrt(s)
   }
 
+  /** Driver-side ceiling on [[bruteCosineTopK]]'s query set: the queries
+    * are collected and broadcast, so a larger set fails loudly instead
+    * of exhausting driver memory.
+    */
+  private[pipeline] val maxBruteQueries = 1 << 16
+
   /** Exact top-k cosine neighbors for each query vector.
-    * queries is expected tiny (broadcast); corpus arbitrary.
+    * queries is expected tiny (broadcast, at most maxBruteQueries rows —
+    * more fails); corpus arbitrary.
     *
-    * r7 shape (guide §1.2 step 1): the r6 version materialized the full
-    * |queries| × |corpus| cross join as rows and SORTED every partition
-    * of it to feed the window's rank limit — at 16 × 10⁶ that sort was
-    * most of the phase-F truth-set wall. Now each corpus partition
-    * streams once against the broadcast query set holding one bounded
-    * k-heap per query; only |queries| × k rows per partition surface to
-    * the final (tiny) window rank. Bit-identical output: dot and norms
+    * Shape: each corpus partition streams once against the broadcast
+    * query set holding one bounded k-heap per query; only |queries| × k
+    * rows per partition surface to the final (tiny) window rank — no
+    * |queries| × |corpus| cross join is ever materialized or sorted
+    * (guide §1.2 step 1). Bit-identical output: dot and norms
     * use the same FP op order as dotProductUdf/normCol, the heap's
     * total order is exactly the window's (cosine DESC, neighbor_id
     * ASC — java.lang.Double.compare, NaN-largest, matching Spark's
@@ -93,9 +98,12 @@ object Similarity {
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col(idCol), col(vecCol)).collect()
+    val qRows = queries.select(col(idCol), col(vecCol)).limit(maxBruteQueries + 1).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
+    require(qRows.length <= maxBruteQueries,
+      s"bruteCosineTopK: more than maxBruteQueries = $maxBruteQueries query vectors " +
+        "(they are collected to the driver); batch the queries")
     val qIds = qRows.map(_._1)
     val qVecs = qRows.map(_._2)
     val qNorms = qVecs.map(normOf)
@@ -166,8 +174,8 @@ object Similarity {
   /** H-bit sign-LSH code of a vector column (UDF: tight loop over
     * 64-float arrays beats a 64×H Column expression tree).
     *
-    * The hyperplane matrix is MATERIALIZED once per task per dimension
-    * (r4): planeComponent is a two-stage splitmix chain, and deriving it
+    * The hyperplane matrix is MATERIALIZED once per task per dimension:
+    * planeComponent is a two-stage splitmix chain, and deriving it
     * per (plane, dim) per ROW made the code pass ~20 arithmetic ops per
     * multiply-add — measured 17–19 s for 1M×64f at 32c with the inline
     * chain vs ~2 s with the cached matrix. The cache is inside the UDF
@@ -193,9 +201,9 @@ object Similarity {
     })
   }
 
-  /** Query-directed multi-probe band codes (VERDICT r4 next-round #1 —
-    * the recall lever lshParamsFor's saturation warning promises; the
-    * probing idea is Lv et al., "Multi-Probe LSH", VLDB 2007 [LIT],
+  /** Query-directed multi-probe band codes (the recall lever
+    * lshParamsFor's saturation warning promises; the probing idea is
+    * Lv et al., "Multi-Probe LSH", VLDB 2007 [LIT],
     * adapted to sign-LSH): beyond the exact band value, also probe the
     * codes obtained by flipping the bits whose hyperplane margin |v·h|
     * is SMALLEST — those are precisely the bits most likely to differ
@@ -289,7 +297,7 @@ object Similarity {
 
   /** (id, band, bandVal) band-decomposition rows for a vector frame:
     * exact codes (probeBits = 0 — one row per band, the shape every
-    * sign-LSH path used through r4), or the multi-probe expansion
+    * exact-code sign-LSH path uses), or the multi-probe expansion
     * (probeBits > 0 — 2^probeBits rows per band, a superset of the
     * exact rows). Shared by the ANN and dedup LSH paths.
     */
@@ -313,31 +321,30 @@ object Similarity {
     }
   }
 
-  /** Auto multi-probe policy (r5): probing turns on exactly when
+  /** Auto multi-probe policy: probing turns on exactly when
     * lshParamsFor had to REDUCE the band count below its 4-band default
     * — the saturated regime (n ≳ 7×10^7 at the default target) where
-    * VERDICT r4 what's-wrong #1 showed recall collapsing by
-    * construction. 2 bands lose the most recall → probe hardest (2^8
-    * codes/band); 3 bands → a moderate 2^4; the unsaturated 4-band
-    * geometry keeps the exact-code behavior (and the r4 oracles).
+    * exact-code recall collapses by construction. 2 bands lose the
+    * most recall → probe hardest (2^8 codes/band); 3 bands → a
+    * moderate 2^4; the unsaturated 4-band geometry keeps the exact-code
+    * behavior (and its oracles).
     */
   private[pipeline] def autoProbeBits(numBands: Int, bandBits: Int): Int =
     if (numBands <= 2) math.min(8, bandBits)
     else if (numBands == 3) math.min(4, bandBits)
     else 0
 
-  /** Scale-aware sign-LSH sizing (VERDICT r1; saturation fix r4):
-    * bandBits chosen so an AVERAGE band bucket over n corpus rows holds
-    * ≈ targetBucket candidates (n / 2^bandBits ≤ target — the per-query
-    * candidate scan and the bucket join stay bounded as the corpus
-    * grows), floored at 4. Derivation: bandBits = ceil(log2(n /
-    * targetBucket)).
+  /** Scale-aware sign-LSH sizing: bandBits chosen so an AVERAGE band
+    * bucket over n corpus rows holds ≈ targetBucket candidates
+    * (n / 2^bandBits ≤ target — the per-query candidate scan and the
+    * bucket join stay bounded as the corpus grows), floored at 4.
+    * Derivation: bandBits = ceil(log2(n / targetBucket)).
     *
     * The bucket bound is the invariant; band COUNT is the adjustable
-    * lever (VERDICT r3 what's-wrong #2). The old version clamped
-    * bandBits at 60/numBands, so past n ≈ targetBucket·2^15 the average
-    * bucket grew silently until the hot-bucket caps dropped essentially
-    * every bucket — a silent recall collapse. Now bandBits always grows
+    * lever. Clamping bandBits at 60/numBands instead would, past
+    * n ≈ targetBucket·2^15, grow the average bucket silently until the
+    * hot-bucket caps dropped essentially every bucket — a silent recall
+    * collapse. So bandBits always grows
     * with n (capped only by the 63-bit code word at 31 bits ≡
     * n > targetBucket·2^31 ≈ 2×10^12 at the default target, logged),
     * and numBands is REDUCED when the requested bands no longer fit —
@@ -368,12 +375,12 @@ object Similarity {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Default IVF geometry for an n-row corpus (VERDICT r3 what's-wrong
-    * #1): numLists = min(√n, sampleCap, n) — √n is the standard IVF
-    * balance between cell size (n/K) and probe cost (K), but the
-    * driver-side trainer needs at least one sample per centroid and its
-    * sample is capped, so K is too. Past K = sampleCap (n ≈ 4.3×10⁹ at
-    * the default 65536) the single-level quantizer degrades gracefully
+  /** Default IVF geometry for an n-row corpus: numLists =
+    * min(√n, sampleCap, n) — √n is the standard IVF balance between
+    * cell size (n/K) and probe cost (K), but the driver-side trainer
+    * needs at least one sample per centroid and its sample is capped,
+    * so K is too. Past K = sampleCap (n ≈ 4.3×10⁹ at the default 65536)
+    * the single-level quantizer degrades gracefully
     * — cells grow past √n instead of the old hard `require` throw — and
     * that is also the regime where a real deployment moves to a
     * two-level quantizer (coarse cells → per-cell sub-quantizer, the
@@ -389,19 +396,19 @@ object Similarity {
     (nl, ivfNprobeFor(nl, 0))
   }
 
-  /** Default probe count for an EFFECTIVE list count (ADVICE r4 #2):
+  /** Default probe count for an EFFECTIVE list count:
     * derived from the list count actually in use — nl/4, floored at 2 —
     * so an explicit numLists gets a probe count that tracks ITS
-    * geometry, not the derived default's (the r4 code probed
-    * derived-nl/4 lists regardless, silently shifting recall/cost for
-    * explicit-numLists callers: numLists=8 over 1M rows probed all 8,
-    * numLists=10000 probed 250). An explicit request is clamped to nl.
+    * geometry, not the derived default's (probing derived-nl/4 lists
+    * regardless would silently shift recall/cost for explicit-numLists
+    * callers: numLists=8 over 1M rows would probe all 8, numLists=10000
+    * only 250). An explicit request is clamped to nl.
     */
   def ivfNprobeFor(numLists: Int, requested: Int): Int =
     if (requested > 0) math.min(requested, numLists)
     else math.min(numLists, math.max(2, numLists / 4))
 
-  // ---- IVF (inverted-file) ANN — the second scale path (r3) ------------
+  // ---- IVF (inverted-file) ANN — the second scale path -----------------
 
   /** Deterministic spherical k-means coarse quantizer, trained on a
     * bounded DRIVER-side sample (the classic IVF design: the model is
@@ -447,7 +454,7 @@ object Similarity {
                               iters: Int): Array[Array[Double]] = {
     var centroids = sampled.take(numLists).map(_.clone())
     val dim = centroids(0).length
-    // Parallel assignment with DETERMINISTIC accumulation (r4): the
+    // Parallel assignment with DETERMINISTIC accumulation: the
     // sequential O(sample·K·d) loop was the IVF bench floor (~5 s of a
     // 7 s phase at 16384×1000×64×2 iters on one core). Chunks are fixed
     // index ranges and partials merge in ascending chunk order, so the
@@ -544,11 +551,11 @@ object Similarity {
     dots.sorted.take(nprobe).map(_._2).toArray
   }
 
-  /** Allocation-lean flat-path assignment kernel (r7, guide §1.2 "per-
-    * task work"): the r6 assign UDF paid, per corpus row, two array
-    * allocations (toArray.map + normalize's out) and a 2-D
+  /** Allocation-lean flat-path assignment kernel (guide §1.2 "per-task
+    * work"): a plain nearestList(normalize(v)) UDF pays, per corpus row,
+    * two array allocations (toArray.map + normalize's out) and a 2-D
     * Array[Array[Double]] walk whose per-centroid row dereference +
-    * bounds checks dominated the 64·K MACs. This kernel flattens the
+    * bounds checks dominate the 64·K MACs. This kernel flattens the
     * centroid matrix row-major ONCE per task (the UDF closure owns it)
     * and normalizes into a single scratch-free pass.
     *
@@ -597,20 +604,11 @@ object Similarity {
     }
   }
 
-  /** The flat-IVF corpus-assignment UDF over a centroid model (shared
-    * by ivfCosineTopK and the BenchExtra isolation bench).
-    */
+  /** The flat-IVF corpus-assignment UDF over a centroid model. */
   def assignUdfFor(centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
     val kernel = new CentroidKernel(centroids)
     udf((v: Array[Float]) => kernel.nearest(v))
   }
-
-  /** r6 assignment shape, kept ONLY for the BenchExtra before/after
-    * A/B; value-identical to assignUdfFor (CentroidKernel doc).
-    */
-  def assignUdfOld(centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((v: Array[Float]) =>
-      nearestList(normalize(v.toArray.map(_.toDouble)), centroids))
 
   /** IVF ANN: corpus partitioned into numLists coarse cells; a query
     * scores only the cells of its nprobe nearest centroids. Exact
@@ -634,13 +632,13 @@ object Similarity {
     // derived geometry respects the trainer's sample cap (ivfParamsFor;
     // the old √n-only default threw past n = sampleCap²)
     val (dnl, _) = ivfParamsFor(n, sampleCap)
-    // Derived-default dispatch (VERDICT r4 next-round #4): past the
+    // Derived-default dispatch: past the
     // flat-scan threshold the default no longer warns-and-proceeds into
     // the known-bad O(K·d)-per-row regime (measured 54 s flat vs 6 s
     // two-level at 10M×64f/32c) — it delegates to the two-level
     // quantizer. Only an EXPLICIT numLists pins the flat path (with the
     // warning), so flat-vs-two-level comparisons stay runnable; an
-    // nprobe alone does NOT opt out (ADVICE r5 #4 — nprobe has no
+    // nprobe alone does NOT opt out (nprobe has no
     // flat-specific meaning worth pinning the slow path for): the
     // two-level quantizer's k1·k2 effective cells match the flat √n
     // granularity, so the caller's probed-cell budget carries over as
@@ -653,7 +651,7 @@ object Similarity {
         corpusCount = n, iters = iters, sampleCap = sampleCap, idCol = idCol, vecCol = vecCol)
     }
     val nl = if (numLists > 0) numLists else dnl
-    // probe count tracks the EFFECTIVE list count (ADVICE r4 #2)
+    // probe count tracks the EFFECTIVE list count
     val np = ivfNprobeFor(nl, nprobe)
     if (nl > 2048)
       log.warn(s"ivfCosineTopK: flat quantizer with $nl cells scans " +
@@ -700,7 +698,7 @@ object Similarity {
     * O((k1+k2)·d) instead of O(√n·d). Capped at 4096 per level
     * (16.8 M cells ≡ n ≈ 2.8×10¹⁴ — past that, a third level).
     * Probes default ASYMMETRICALLY: probe1 = k/4 coarse cells,
-    * probe2 = k/2 residual codes. The r6 50 M-vector sweep
+    * probe2 = k/2 residual codes. The 50 M-vector sweep
     * (`ann_50m_ivf2sweep`, BENCH/BASELINE.md) showed the first
     * sub-1.0 recall datapoint (0.981 at k/4 × k/4) is residual-side:
     * doubling probe2 alone restored recall 1.0 at ~equal wall
@@ -719,9 +717,8 @@ object Similarity {
     (k, k, p1, p2)
   }
 
-  /** Two-level IVF ANN — the beyond-10⁹ quantizer (VERDICT r3
-    * what's-wrong #1 named this as the 10¹²-row path; r4 implements
-    * it). Level 1 is the spherical coarse quantizer; level 2 is one
+  /** Two-level IVF ANN — the beyond-10⁹ quantizer (the 10¹²-row
+    * path). Level 1 is the spherical coarse quantizer; level 2 is one
     * SHARED spherical codebook over normalized level-1 RESIDUALS
     * (v̂ − c1) — the inverted-multi-index idea (Babenko & Lempitsky,
     * CVPR 2012 [LIT]; here a residual codebook rather than a product
@@ -789,7 +786,7 @@ object Similarity {
     * cosine is computed on the candidates, so precision is 1 — only
     * recall is approximate (more bands → higher recall).
     *
-    * Sizing (VERDICT r2 next-round #3): by DEFAULT (numPlanes=0,
+    * Sizing: by DEFAULT (numPlanes=0,
     * bandBits=0) the parameters are DERIVED from the corpus size via
     * lshParamsFor — callers no longer need to know the sizing helper
     * exists to get bounded buckets at scale. The count costs one
@@ -797,14 +794,14 @@ object Similarity {
     * knows it (a catalog rowcount at 10^12 scale), or explicit
     * numPlanes+bandBits to pin both.
     *
-    * Multi-probe (r5, VERDICT r4 next-round #1): probeBits = -1 (auto)
+    * Multi-probe: probeBits = -1 (auto)
     * enables query-directed probing exactly when the DERIVED geometry
     * had to reduce the band count (the saturated n ≳ 7×10^7 regime
     * where exact-code recall collapses — autoProbeBits); 0 disables,
     * > 0 pins the probe width. Probing expands only the QUERY band
     * rows (×2^probeBits) — corpus-side cost is unchanged.
     *
-    * Skew defense (ADVICE r4 #5): corpus band buckets above
+    * Skew defense: corpus band buckets above
     * maxBucketSize are dropped from candidate generation with CapStats
     * accounting (op "ann_lsh_cosine") — a saturated band value on a
     * clustered corpus now degrades recall LOUDLY instead of growing
@@ -827,7 +824,7 @@ object Similarity {
     if (pb > 0)
       log.info(s"lshCosineTopK: multi-probe ON — $numBands bands of $bb " +
         s"bits, 2^$pb codes probed per band per query")
-    // banding carries IDS ONLY (r4): exploding numBands rows per doc
+    // banding carries IDS ONLY: exploding numBands rows per doc
     // with the vector attached materialized numBands copies of every
     // embedding through the join — at 10^6×64f that is the whole corpus
     // ×4 in flight. Vectors are re-attached to the (small) deduplicated

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 import lucy.{Hashing, LucySpec}
-import lucy.index.{PostingBlock, RunIterator, SearchableIndex, Stats}
+import lucy.index.{PostingBlock, RunIterator, SearchableIndex}
 
 /** A segment block row as shuffled to docId buckets (PostingBlock +
   * routing bucket). */
@@ -19,7 +19,54 @@ private[query] case class BucketedBlock(
     posVarint)
 }
 
-/** Top-k BM25 over the segment index — entry point 2 (SURVEY.md §3.2).
+/** Driver-side cache of gathered posting blocks, keyed by term — the
+  * serving-layer analog of lucy.js holding its whole index in memory.
+  * Safe because a LucyIndex directory is immutable (compaction writes a
+  * NEW generation dir and the engine is rebuilt on it): entries never
+  * invalidate. Size-capped LRU so a long-running server holds only the
+  * working set; each entry is ≤ gatherMaxPostings' worth of compressed
+  * blocks. A cache hit makes a repeat-term query pure driver compute —
+  * zero Spark jobs.
+  *
+  * Value shape: one entry per (salt, srcPart) stream, blocks sorted by
+  * firstDocId — exactly the kernel's cursor grouping.
+  *
+  * Oversize policy: an entry larger than maxBytes is still
+  * admitted — it evicts everything else and pins the cache above its cap
+  * until the next put evicts it in turn. Deliberate (the alternative is
+  * re-fetching the hottest term on every repeat), and bounded: one entry
+  * is at most gatherMaxPostings' worth of compressed blocks, ≈ a few MB
+  * of varint bytes (2^20 postings × ~2–4 B + 64 B/block overhead), so
+  * the worst-case cache size is maxBytes + one gather.
+  */
+final class BlockCache(maxBytes: Long = 256L << 20) {
+  private type Groups = Seq[((Int, Int), Array[PostingBlock])]
+  private val map = new java.util.LinkedHashMap[String, (Long, Groups)](64, 0.75f, true)
+  private var bytes = 0L
+
+  def get(term: String): Option[Groups] = synchronized {
+    Option(map.get(term)).map(_._2)
+  }
+
+  def put(term: String, groups: Groups): Unit = synchronized {
+    if (map.containsKey(term)) return
+    val sz = groups.iterator.flatMap(_._2).map(b =>
+      b.docsVarint.length + b.tfsVarint.length + b.dlsVarint.length + b.posVarint.length + 64L).sum
+    map.put(term, (sz, groups))
+    bytes += sz
+    val it = map.entrySet().iterator()
+    while (bytes > maxBytes && it.hasNext) {
+      val e = it.next()
+      if (e.getKey != term) { bytes -= e.getValue._1; it.remove() }
+    }
+  }
+
+  def sizeBytes: Long = synchronized(bytes)
+}
+
+/** Top-k BM25 over the segment index (SURVEY.md §3.2). [[QueryEngine]]
+  * is the one serving entry point; `search`/`searchWithUrls` here are
+  * one-shot conveniences over an unwarmed engine.
   *
   * Plan shape and why it scales:
   *
@@ -62,51 +109,6 @@ private[query] case class BucketedBlock(
   * Query-term stats (df per term, N, avgdl) are driver-looked-up (one
   * tiny pruned job over stats/terms) and broadcast inside QueryPlan.
   */
-/** Driver-side cache of gathered posting blocks, keyed by term — the
-  * serving-layer analog of lucy.js holding its whole index in memory.
-  * Safe because a LucyIndex directory is immutable (compaction writes a
-  * NEW generation dir and the engine is rebuilt on it): entries never
-  * invalidate. Size-capped LRU so a long-running server holds only the
-  * working set; each entry is ≤ gatherMaxPostings' worth of compressed
-  * blocks. A cache hit makes a repeat-term query pure driver compute —
-  * zero Spark jobs.
-  *
-  * Value shape: one entry per (salt, srcPart) stream, blocks sorted by
-  * firstDocId — exactly the kernel's cursor grouping.
-  *
-  * Oversize policy (VERDICT r2): an entry larger than maxBytes is still
-  * admitted — it evicts everything else and pins the cache above its cap
-  * until the next put evicts it in turn. Deliberate (the alternative is
-  * re-fetching the hottest term on every repeat), and bounded: one entry
-  * is at most gatherMaxPostings' worth of compressed blocks, ≈ a few MB
-  * of varint bytes (2^20 postings × ~2–4 B + 64 B/block overhead), so
-  * the worst-case cache size is maxBytes + one gather.
-  */
-final class BlockCache(maxBytes: Long = 256L << 20) {
-  private type Groups = Seq[((Int, Int), Array[PostingBlock])]
-  private val map = new java.util.LinkedHashMap[String, (Long, Groups)](64, 0.75f, true)
-  private var bytes = 0L
-
-  def get(term: String): Option[Groups] = synchronized {
-    Option(map.get(term)).map(_._2)
-  }
-
-  def put(term: String, groups: Groups): Unit = synchronized {
-    if (map.containsKey(term)) return
-    val sz = groups.iterator.flatMap(_._2).map(b =>
-      b.docsVarint.length + b.tfsVarint.length + b.dlsVarint.length + b.posVarint.length + 64L).sum
-    map.put(term, (sz, groups))
-    bytes += sz
-    val it = map.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != term) { bytes -= e.getValue._1; it.remove() }
-    }
-  }
-
-  def sizeBytes: Long = synchronized(bytes)
-}
-
 object Searcher {
 
   /** Postings-volume ceiling for the scatter-gather path. 2^20 postings
@@ -134,10 +136,7 @@ object Searcher {
              mode: QueryMode.Value = QueryMode.And,
              k: Int = LucySpec.defaultK,
              stem: Boolean = LucySpec.stemming): DataFrame =
-    searchWith(spark, index.segments(spark), query, mode, k, index.corpusStats(spark),
-      terms => index.lookupTerms(spark, terms),
-      expand = (p, max) => Stats.expandPrefix(index.termStats(spark), p, max),
-      tombstones = index.tombstoneIds, stem = stem)
+    new QueryEngine(spark, index, stem).search(query, mode, k)
 
   /** Search with externally supplied plan inputs. QueryEngine passes a
     * REUSED segments DataFrame and cached stats: re-creating the scan per
@@ -148,8 +147,8 @@ object Searcher {
   def searchWith(spark: SparkSession, segments: DataFrame, query: String,
                  mode: QueryMode.Value, k: Int, stats: lucy.index.CorpusStats,
                  lookup: Seq[String] => Map[String, lucy.index.TermStats],
+                 blockCache: BlockCache,
                  gatherMaxPostings: Long = defaultGatherMaxPostings,
-                 blockCache: Option[BlockCache] = None,
                  expand: (String, Int) => Seq[String] = null,
                  tombstones: Array[Long] = Array.empty,
                  stem: Boolean = LucySpec.stemming,
@@ -157,9 +156,9 @@ object Searcher {
     val empty = spark.createDataFrame(
       new java.util.ArrayList[Row](), resultSchema)
 
-    // term set (+ phrase slots) by mode (§8.6 r2). `stem` must match the
-    // flag the index was built with (§8.7 r3): query tokens are stemmed
-    // iff corpus tokens were.
+    // term set (+ phrase slots) by mode (§8.6). `stem` must match the
+    // flag the index was built with (§8.7): query tokens are stemmed iff
+    // corpus tokens were.
     val slots: Array[String] = mode match {
       case QueryMode.Phrase => LucySpec.tokenizeWith(query, stem)
       case _ => Array.empty
@@ -175,7 +174,7 @@ object Searcher {
         if (tombstones.isEmpty || first.length < LucySpec.maxPrefixExpand)
           first.toArray.sorted
         else {
-          // ADVICE r2: expansion runs over the RAW term stats, so when
+          // Expansion runs over the RAW term stats, so when
           // the cap binds under deletion, fully-deleted terms (post-
           // delete df ≤ 0) would occupy expansion slots and the term set
           // would diverge from the naive engine's "first maxPrefixExpand
@@ -193,7 +192,7 @@ object Searcher {
           // tombstones) restores exactness; reaching the ceiling at all
           // implies a store far past its compaction debt. The parameter
           // exists so WandEquivalenceSpec can pin the partial-result
-          // behavior without a 4M-term fixture (VERDICT r3 #7).
+          // behavior without a 4M-term fixture.
           val maxCap = expandCeiling
           var cap = LucySpec.maxPrefixExpand
           var expanded = first
@@ -240,7 +239,7 @@ object Searcher {
 
     // Routing + bucket sizing use the RAW (pre-delete) postings volume:
     // the gather collects, and the exchange shuffles, the physical
-    // blocks — tombstoned postings included (ADVICE r2). Scoring idf
+    // blocks — tombstoned postings included. Scoring idf
     // still uses the exact post-delete df carried in the plan.
     val sumRawDf = present.map(dfMap(_).gatherDf).sum
     if (sumRawDf <= gatherMaxPostings) {
@@ -272,13 +271,10 @@ object Searcher {
     * docId range, same total order.
     */
   private def gatherLocal(spark: SparkSession, segments: DataFrame, plan: QueryPlan,
-                          blockCache: Option[BlockCache]): DataFrame = {
+                          blockCache: BlockCache): DataFrame = {
     import spark.implicits._
     val cached: Map[String, Seq[((Int, Int), Array[PostingBlock])]] =
-      blockCache match {
-        case Some(c) => plan.terms.iterator.flatMap(t => c.get(t).map(t -> _)).toMap
-        case None => Map.empty
-      }
+      plan.terms.iterator.flatMap(t => blockCache.get(t).map(t -> _)).toMap
     val missing = plan.terms.filterNot(cached.contains)
 
     val fetched: Map[String, Seq[((Int, Int), Array[PostingBlock])]] =
@@ -303,7 +299,7 @@ object Searcher {
         // a present term can still collect zero blocks only if segments and
         // stats disagree; cache the empty groups too (harmless)
         val complete = missing.iterator.map(t => t -> byTerm.getOrElse(t, Seq.empty)).toMap
-        blockCache.foreach(c => complete.foreach { case (t, g) => c.put(t, g) })
+        complete.foreach { case (t, g) => blockCache.put(t, g) }
         complete
       }
 
@@ -352,7 +348,7 @@ object Searcher {
 
   /** Inclusive end of a bucket's docId range. The topmost bucket
     * (Long.MaxValue div width) is end-inclusive at Long.MaxValue so a
-    * docId of exactly Long.MaxValue is scoreable (ADVICE r1).
+    * docId of exactly Long.MaxValue is scoreable.
     */
   private[query] def bucketEndInclusive(bucket: Long, width: Long): Long =
     if (bucket >= Long.MaxValue / width) Long.MaxValue
@@ -390,9 +386,9 @@ object Searcher {
       }
   }
 
-  /** J4 — attach urls for display (tiny isin-filtered broadcast join). */
+  /** J4 — [[search]] with urls attached ([[QueryEngine.searchWithUrls]]). */
   def searchWithUrls(spark: SparkSession, index: SearchableIndex, query: String,
                      mode: QueryMode.Value = QueryMode.And,
                      k: Int = LucySpec.defaultK): DataFrame =
-    NaiveSearch.withUrls(search(spark, index, query, mode, k), index.docmap(spark))
+    new QueryEngine(spark, index).searchWithUrls(query, mode, k)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import lucy.Hashing
 import lucy.fixtures.PagesGen
 import lucy.index.{IndexBuilder, IndexConfig, Ingest, LucyIndex, Stats}
-import lucy.query.{QueryMode, Searcher}
+import lucy.query.{BlockCache, QueryMode, Searcher}
 
 /** Regenerates PLANS.md — the physical-plan evidence document — from a
   * 5000-doc index at local[8]. Run whenever the plan-shaping code
@@ -83,7 +83,7 @@ object CapturePlans {
     // PLAN2: distributed bucket-exchange query (forced)
     val p2 = Searcher.searchWith(spark, segments, "spark shuffle", QueryMode.And, 10,
       index.corpusStats(spark), ts => Stats.lookupTerms(index.termStats(spark), ts),
-      gatherMaxPostings = 0L)
+      new BlockCache(), gatherMaxPostings = 0L)
     sb.append("\n=====PLAN2: distributed query (pruned scan -> bucket exchange -> WAND -> TakeOrdered)\n")
     sb.append(planOf(p2))
 
@@ -100,7 +100,7 @@ object CapturePlans {
     // PLAN4: phrase query distributed (posVarint read)
     val p4 = Searcher.searchWith(spark, segments, "spark shuffle", QueryMode.Phrase, 10,
       index.corpusStats(spark), ts => Stats.lookupTerms(index.termStats(spark), ts),
-      gatherMaxPostings = 0L)
+      new BlockCache(), gatherMaxPostings = 0L)
     sb.append("\n=====PLAN4: phrase query (positions column in ReadSchema)\n")
     sb.append(planOf(p4))
 
@@ -116,7 +116,8 @@ object CapturePlans {
     val index2 = LucyIndex(dir2)
     val p2b = Searcher.searchWith(spark, index2.segments(spark),
       "spark shuffle index posting query", QueryMode.And, 10,
-      index2.corpusStats(spark), ts => Stats.lookupTerms(index2.termStats(spark), ts))
+      index2.corpusStats(spark), ts => Stats.lookupTerms(index2.termStats(spark), ts),
+      new BlockCache())
     sb.append("\n=====PLAN2b: bucket exchange at bench scale (270k docs, and_head5x, natural routing)\n")
     sb.append(planOf(p2b))
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import lucy.{LucySpec, LucyStore, SparkFunSuite}
 import lucy.fixtures.PagesGen
 import lucy.index.{Ingest, Stats}
-import lucy.query.{NaiveSearch, QueryMode}
+import lucy.query.{NaiveSearch, QueryMode, Searcher}
 
 /** The full lucy.js store lifecycle through the one public facade:
   * bootstrap → put (add + update) → delete → search (all modes) →
@@ -106,5 +106,36 @@ class LucyStoreSpec extends SparkFunSuite {
     }
     val post = store.search(oldTok, QueryMode.Or, 1000).collect().map(_.getLong(0)).toSet
     assert(!post.contains(p7Id), "post-compact: replaced version's postings are purged")
+  }
+
+  test("searchWithUrls on a live composite attaches each hit's own url") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("lucy-store-urls").toString + "/store"
+    val store = new LucyStore(spark, root)
+    def pages(lo: Long, hi: Long) = spark.range(lo, hi).as[Long].map(PagesGen.page _).toDF()
+    // base + two deltas (new docs; an update of an existing url), a
+    // delete, and a delete -> re-put — all before any compaction
+    store.bootstrap(PagesGen.pages(spark, 200))
+    store.put(pages(200, 260), batchId = 0L)
+    val p7Url = "https://example.org/p/7"
+    store.put(Seq(lucy.fixtures.Page(p7Url, java.sql.Timestamp.valueOf("2025-06-01 00:00:00"),
+      null, "spark shuffle wand heap", "en")).toDF(), batchId = 1L)
+    store.delete((0L until 260L by 10).map(i => s"https://example.org/p/$i"))
+    store.put(pages(20, 21), batchId = 2L)
+
+    val rows = (probes :+ (("spark", QueryMode.Or, 100))).flatMap { case (q, m, k) =>
+      val got = store.searchWithUrls(q, m, k).collect()
+        .map(r => (r.getAs[Long]("docId"), r.getAs[Double]("score"), r.getAs[String]("url")))
+      got.foreach { case (docId, _, url) =>
+        assert(url != null, s"[$q/$m] docId $docId has no url")
+        assert(LucySpec.docIdForUrl(url) === docId, s"[$q/$m] $url attached to docId $docId")
+      }
+      val direct = Searcher.searchWithUrls(spark, store.view, q, m, k).collect()
+        .map(r => (r.getAs[Long]("docId"), r.getAs[Double]("score"), r.getAs[String]("url")))
+      assert(direct.toSeq === got.toSeq, s"[$q/$m] Searcher.searchWithUrls over store.view")
+      got
+    }
+    assert(rows.nonEmpty)
+    store.close()
   }
 }

@@ -162,6 +162,18 @@ class PipelineSpec extends SparkFunSuite {
     assert(recalls.sum / recalls.size > 0.2, s"mean recall ${recalls.sum / recalls.size}")
   }
 
+  test("bruteCosineTopK fails loudly past its driver-side query bound") {
+    val n = Similarity.maxBruteQueries + 1L
+    def vecs(rows: Long) = spark.range(rows).select(col("id").as("vec_id"),
+      array(lit(1.0f), (col("id") % 7).cast("float")).as("embedding"))
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.bruteCosineTopK(vecs(4), vecs(n), k = 2)
+    }
+    assert(ex.getMessage.contains(s"maxBruteQueries = ${Similarity.maxBruteQueries}"))
+    // exactly at the bound the query side is accepted
+    assert(Similarity.bruteCosineTopK(vecs(4), vecs(n - 1), k = 2).count() === 2 * (n - 1))
+  }
+
   test("scale-aware LSH parameter derivation; recall holds at two scale factors") {
     import spark.implicits._
     // derivation shape: bigger corpora get wider bands (bounded buckets);

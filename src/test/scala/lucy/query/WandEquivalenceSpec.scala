@@ -80,7 +80,7 @@ class WandEquivalenceSpec extends SparkFunSuite {
   private def searchForced(index: LucyIndex, q: String, m: QueryMode.Value, k: Int,
                            gatherMax: Long): DataFrame =
     Searcher.searchWith(spark, index.segments(spark), q, m, k, index.corpusStats(spark),
-      ts => Stats.lookupTerms(index.termStats(spark), ts), gatherMax,
+      ts => Stats.lookupTerms(index.termStats(spark), ts), new BlockCache(), gatherMax,
       expand = (p, max) => Stats.expandPrefix(index.termStats(spark), p, max))
 
   test("WAND == naive on a 600-doc corpus (unsalted), all execution shapes") {
@@ -224,7 +224,7 @@ class WandEquivalenceSpec extends SparkFunSuite {
 
     def searchCeil(idx: SearchableIndex, ceiling: Int) =
       Searcher.searchWith(spark, idx.segments(spark), "zz", QueryMode.Prefix, 150,
-        idx.corpusStats(spark), terms => idx.lookupTerms(spark, terms),
+        idx.corpusStats(spark), terms => idx.lookupTerms(spark, terms), new BlockCache(),
         expand = (p, max) => Stats.expandPrefix(idx.termStats(spark), p, max),
         tombstones = idx.tombstoneIds, expandCeiling = ceiling)
 
