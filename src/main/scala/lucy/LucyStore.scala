@@ -223,7 +223,10 @@ final class LucyStore(spark: SparkSession, rootDir: String,
              k: Int = LucySpec.defaultK): DataFrame =
     engine.search(query, mode, k)
 
-  /** Search with urls attached (J4 join-back against the engine's view). */
+  /** Search with urls attached: one exchange-free docId probe of the
+    * view's part docmaps, latest version per docId picked on the driver
+    * ([[QueryEngine.searchWithUrls]]).
+    */
   def searchWithUrls(query: String, mode: QueryMode.Value = QueryMode.And,
                      k: Int = LucySpec.defaultK): DataFrame =
     engine.searchWithUrls(query, mode, k)

@@ -44,6 +44,9 @@ case class TombstonedIndex(inner: SearchableIndex, override val tombstoneIds: Ar
 
   def termStats(spark: SparkSession): DataFrame = inner.termStats(spark) // raw; see lookupTerms
 
+  // unmasked, like segments: a point lookup drops tombstoneIds itself
+  def docmapParts(spark: SparkSession): Seq[DataFrame] = inner.docmapParts(spark)
+
   override def lookupTerms(spark: SparkSession, terms: Seq[String]): Map[String, TermStats] = {
     val raw = inner.lookupTerms(spark, terms)
     if (raw.isEmpty || tombstoneIds.isEmpty) return raw

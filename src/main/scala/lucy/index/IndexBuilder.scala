@@ -1,6 +1,6 @@
 package lucy.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -45,6 +45,14 @@ trait SearchableIndex {
   def termStats(spark: SparkSession): DataFrame
   def corpusStats(spark: SparkSession): CorpusStats
 
+  /** One slim `(docId, url, tsMicros, srcIdx)` docmap relation per
+    * physical part, unmerged and unmasked: the input of a point lookup
+    * by docId. A docId found in several parts resolves to its max
+    * `(tsMicros, srcIdx)` row ([[CompositeIndex.latestWins]]), the
+    * version [[docmap]] keeps.
+    */
+  def docmapParts(spark: SparkSession): Seq[DataFrame]
+
   /** Query-term stats for planning. TombstonedIndex overrides this with
     * post-delete df (Deletes.deletedDf).
     */
@@ -72,6 +80,8 @@ trait SearchableIndex {
   */
 case class LucyIndex(dir: String) extends SearchableIndex {
   def docmap(spark: SparkSession): DataFrame = spark.read.parquet(s"$dir/docmap")
+  def docmapParts(spark: SparkSession): Seq[DataFrame] =
+    Seq(CompositeIndex.urlSlim(docmap(spark), 0))
   def termStats(spark: SparkSession): DataFrame = spark.read.parquet(s"$dir/stats/terms")
   def segments(spark: SparkSession): DataFrame =
     spark.read.parquet(s"$dir/segments").withColumn("srcPart", lit(0))
@@ -96,10 +106,27 @@ case class LucyIndex(dir: String) extends SearchableIndex {
 object CompositeIndex {
   /** Driver bound for fastCorpusStats' collected small-part rows.
     * A `var` solely so IncrementalSpec can lower it to pin the
-    * fast-path/fallback boundary without a 2²⁰-doc fixture (VERDICT r6
-    * next-round #6); production code never writes it.
+    * fast-path/fallback boundary without a 2²⁰-doc fixture; production
+    * code never writes it.
     */
   @volatile var smallSideLimit: Long = 1L << 20
+
+  /** A docmap row's `warc_ts` as an exact Long for the latest-wins rule:
+    * unix_micros is an exact image of the timestamp, and a null warc_ts
+    * maps to Long.MinValue, below every real one — the rank a null has
+    * in [[CompositeIndex.docmap]]'s max_by struct ordering, so a
+    * driver-side winner never NPEs on it and agrees with the aggregate.
+    */
+  private[lucy] def tsMicros: Column =
+    coalesce(unix_micros(col("warc_ts")), lit(Long.MinValue))
+
+  /** Latest wins: max `(tsMicros, srcIdx)`, a warc_ts tie going to the
+    * later part — docmap()'s `max_by(struct(warc_ts, srcIdx))` order.
+    */
+  private[lucy] val latestWins: Ordering[(Long, Int)] = Ordering.Tuple2[Long, Int]
+
+  private[index] def urlSlim(docmap: DataFrame, srcIdx: Int): DataFrame =
+    docmap.select(col("docId"), col("url"), tsMicros.as("tsMicros"), lit(srcIdx).as("srcIdx"))
 }
 
 case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
@@ -108,6 +135,8 @@ case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
     parts.zipWithIndex.map { case (p, i) =>
       p.segments(spark).withColumn("srcPart", lit(i))
     }.reduce(_ unionByName _)
+  def docmapParts(spark: SparkSession): Seq[DataFrame] =
+    parts.zipWithIndex.map { case (p, i) => CompositeIndex.urlSlim(p.docmap(spark), i) }
   def docmap(spark: SparkSession): DataFrame = {
     // latest version per docId wins (warc_ts tie → later part wins)
     val tagged = parts.zipWithIndex.map { case (p, i) =>
@@ -127,27 +156,26 @@ case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
     if (parts.length == 1) parts.head.corpusStats(spark)
     else fastCorpusStats(spark).getOrElse(aggCorpusStats(spark))
 
-  /** Shuffle-free composite stats (r6, VERDICT r5 next-round #6): the
-    * base+deltas shape has ONE big part and small recent ones, and the
-    * big part's manifest already carries exact (docs, Σ docLen). So:
-    * collect the small parts' slim docmap rows (bounded — guard below),
-    * probe the big part ONCE with a broadcast semi-join for the
-    * overlapping docIds (a pipelined scan, no Exchange), and apply the
-    * winner rule — max (warc_ts, srcIdx), identical to docmap()'s
-    * max_by struct ordering — driver-side. N and Σ docLen corrections
-    * are exact Long arithmetic; avgdl = Σ/N is the same division the
-    * builder's avg produced (doc on BuildManifest.sumDocLen), pinned by
-    * IncrementalSpec's bit-equal composite-vs-scratch scores. This was
-    * the dominant first-query cost of a live store view: a full
-    * docmap-union SHUFFLE per mutation, now one exchange-free pass.
-    * Honest cost accounting: the semi-join's broadcast side is
-    * delta-sized, but its SCAN side reads the whole big-part docmap
-    * (column-pruned to 3 columns, pipelined, no shuffle) — one such
-    * pass per view composition (the engine caches stats per view, the
-    * warm-behind pays it off the query path). Exact stats under
-    * url-update semantics need to learn the delta∩base overlap from
-    * somewhere; without a docId-indexed base that is a scan per NEW
-    * composition, amortized by batching puts.
+  /** Shuffle-free composite stats: the base+deltas shape has ONE big
+    * part and small recent ones, and the big part's manifest already
+    * carries exact (docs, Σ docLen). So: collect the small parts' slim
+    * docmap rows (bounded — guard below), probe the big part ONCE with a
+    * broadcast semi-join for the overlapping docIds (a pipelined scan, no
+    * Exchange), and apply [[CompositeIndex.latestWins]] driver-side. N
+    * and Σ docLen corrections are exact Long arithmetic; avgdl = Σ/N is
+    * the same division the builder's avg produced (doc on
+    * BuildManifest.sumDocLen), pinned by IncrementalSpec's bit-equal
+    * composite-vs-scratch scores. The alternative is a full docmap-union
+    * SHUFFLE per view composition, which dominated a live store's first
+    * query.
+    * Cost accounting: the semi-join's broadcast side is delta-sized, but
+    * its SCAN side reads the whole big-part docmap (column-pruned to 3
+    * columns, pipelined, no shuffle) — one such pass per view
+    * composition (the engine caches stats per view, the warm-behind pays
+    * it off the query path). Exact stats under url-update semantics need
+    * to learn the delta∩base overlap from somewhere; without a
+    * docId-indexed base that is a scan per NEW composition, amortized by
+    * batching puts.
     */
   private def fastCorpusStats(spark: SparkSession): Option[CorpusStats] = {
     val manifests = parts.map(_.manifest(spark))
@@ -158,18 +186,10 @@ case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
     val big = parts(bigIdx)
     // (docId, docLen, tsMicros, srcIdx) rows of every small part,
     // gathered in ONE union job (a collect per part was most of the
-    // path's wall at 5+ deltas); unix_micros is an exact image of the
-    // timestamp, so Long ordering == timestamp ordering in the max_by
-    // struct
-    // null warc_ts guard (ADVICE r6 #3): docmap()'s max_by and the
-    // aggregation fallback tolerate null timestamps; this path must not
-    // NPE on them. Long.MinValue sorts a null-ts row below every real
-    // one — the same "loses every tie" rank a null has in the max_by
-    // struct ordering.
+    // path's wall at 5+ deltas)
     val smalls = parts.zipWithIndex.filter(_._2 != bigIdx).map { case (p, i) =>
       p.docmap(spark)
-        .select(col("docId"), col("docLen").cast("long"),
-          coalesce(unix_micros(col("warc_ts")), lit(Long.MinValue)),
+        .select(col("docId"), col("docLen").cast("long"), CompositeIndex.tsMicros,
           lit(i).as("srcIdx"))
     }.reduce(_ unionByName _)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
@@ -177,8 +197,7 @@ case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
     val overlap: Map[Long, (Long, Long)] = if (smallIds.isEmpty) Map.empty else {
       import spark.implicits._
       big.docmap(spark)
-        .select(col("docId"), col("docLen").cast("long"),
-          coalesce(unix_micros(col("warc_ts")), lit(Long.MinValue)))
+        .select(col("docId"), col("docLen").cast("long"), CompositeIndex.tsMicros)
         .join(broadcast(smallIds.toSeq.toDF("docId")), Seq("docId"), "left_semi")
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     }
@@ -187,13 +206,12 @@ case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
     var n = docsArr(bigIdx)
     var sumLen = manifests(bigIdx).get.sumDocLen.get
     byId.foreach { case (id, rows) =>
-      // max by (tsMicros, srcIdx); big's srcIdx is bigIdx
-      val bestSmall = rows.maxBy(r => (r._3, r._4))
+      // big's srcIdx is bigIdx
+      val bestSmall = rows.maxBy(r => (r._3, r._4))(CompositeIndex.latestWins)
       overlap.get(id) match {
         case Some((bigLen, bigTs)) =>
-          val smallWins = bestSmall._3 > bigTs ||
-            (bestSmall._3 == bigTs && bestSmall._4 > bigIdx)
-          if (smallWins) sumLen += bestSmall._2 - bigLen
+          if (CompositeIndex.latestWins.gt((bestSmall._3, bestSmall._4), (bigTs, bigIdx)))
+            sumLen += bestSmall._2 - bigLen
         case None =>
           n += 1
           sumLen += bestSmall._2
@@ -202,7 +220,7 @@ case class CompositeIndex(parts: Seq[LucyIndex]) extends SearchableIndex {
     Some(CorpusStats(n, if (n == 0) 0.0 else sumLen.toDouble / n))
   }
 
-  /** Fallback (pre-r6 manifests, or a small side too big for the
+  /** Fallback (manifests without sumDocLen, or a small side too big for the
     * driver): SLIM winners aggregation — the scan and shuffle carry
     * (docId, docLen, warc_ts), not the url strings that dominate docmap
     * row width. Winner ordering is identical to docmap()'s.

@@ -145,12 +145,13 @@ object NaiveSearch {
     case m                => search(termTf, docmap, stats, query, m, k, stem)
   }
 
-  /** J4 — join top-k back to display columns. k is tiny: isin filter on
-    * the docmap, no shuffle of the big side.
+  /** J4 — join top-k back to display columns: the oracle's join (the
+    * engine's lookup is [[QueryEngine.searchWithUrls]]). k is tiny: isin
+    * filter on the docmap, no shuffle of the big side.
     */
   def withUrls(topk: DataFrame, docmap: DataFrame): DataFrame = {
     val ids = topk.select("docId").collect().map(_.getLong(0))
-    if (ids.isEmpty) return topk.withColumn("url", lit(null: String))
+    if (ids.isEmpty) return topk.withColumn("url", lit(null).cast("string"))
     topk.join(broadcast(docmap.filter(col("docId").isin(ids.map(_.asInstanceOf[Any]): _*))
       .select(col("docId"), col("url"))), Seq("docId"), "left")
       .orderBy(col("score").desc, col("docId").asc)

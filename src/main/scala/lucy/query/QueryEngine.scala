@@ -1,9 +1,11 @@
 package lucy.query
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
 import lucy.LucySpec
-import lucy.index.{CorpusStats, SearchableIndex, Stats, TermStats}
+import lucy.index.{CompositeIndex, CorpusStats, SearchableIndex, Stats, TermStats}
 
 /** Warm serving handle over an immutable index — the analog of lucy.js's
   * in-memory live index for a query-serving deployment.
@@ -19,7 +21,7 @@ import lucy.index.{CorpusStats, SearchableIndex, Stats, TermStats}
   *    parquet from disk. Safe because a LucyIndex dir is immutable
   *    (compaction writes a NEW generation dir).
   *
-  * Thread-safe; Bench drives it from 8 concurrent client threads.
+  * Thread-safe.
   */
 class QueryEngine(spark: SparkSession, index: SearchableIndex,
                   stem: Boolean = LucySpec.stemming) {
@@ -35,7 +37,8 @@ class QueryEngine(spark: SparkSession, index: SearchableIndex,
   // the driver, which serializes concurrent clients.
   private lazy val segmentsDf = index.segments(spark)
   private lazy val termStatsDf = index.termStats(spark)
-  private lazy val docmapDf = index.docmap(spark)
+  // every part's slim (docId, url, tsMicros, srcIdx) docmap in one union
+  private lazy val docmapPartsDf = index.docmapParts(spark).reduce(_ unionByName _)
 
   /** Pin index artifacts into executor memory; returns this. */
   def warm(): this.type = {
@@ -51,13 +54,14 @@ class QueryEngine(spark: SparkSession, index: SearchableIndex,
     * via empty-term pruned probes ("" can never be a token, and the
     * term-sorted stats files' min/max exclude it, so no data pages are
     * read). Unlike [[warm]], nothing is cached: right for a live store
-    * view whose base must not be pinned.
+    * view whose base must not be pinned. The url probe's docmap
+    * relations are created too, which lists their files.
     */
   def warmPlans(): this.type = {
-    import org.apache.spark.sql.functions.col
     stats
     termStatsDf.filter(col("term") === "").count()
     segmentsDf.filter(col("term") === "").count()
+    docmapPartsDf
     this
   }
 
@@ -86,10 +90,34 @@ class QueryEngine(spark: SparkSession, index: SearchableIndex,
         prefixCache.getOrElseUpdate((p, max), Stats.expandPrefix(termStatsDf, p, max)),
       tombstones = index.tombstoneIds, stem = stem)
 
-  /** J4 — [[search]] with display urls attached from this engine's own
-    * view of the docmap (tiny isin-filtered broadcast join).
+  /** Every part's docmap rows for `ids`, unmerged: the docId filter sits
+    * on each part's scan under a plain Union (no Exchange), so collecting
+    * it is one job that returns at most ids × parts rows.
+    */
+  private[query] def urlProbe(ids: Seq[Long]): DataFrame =
+    docmapPartsDf.filter(col("docId").isin(ids.map(_.asInstanceOf[Any]): _*))
+
+  /** J4 — [[search]] with display urls attached: the top-k is collected
+    * once, its live docIds are looked up with one [[urlProbe]], and each
+    * docId takes its [[CompositeIndex.latestWins]] row — the version
+    * the index's merged docmap keeps. Tombstoned ids get no url, as under
+    * TombstonedIndex.docmap's anti-join. Returns a LocalRelation
+    * `(docId, score, nTerms, url)` in [[search]]'s order.
     */
   def searchWithUrls(query: String, mode: QueryMode.Value = QueryMode.And,
-                     k: Int = LucySpec.defaultK): DataFrame =
-    NaiveSearch.withUrls(search(query, mode, k), docmapDf)
+                     k: Int = LucySpec.defaultK): DataFrame = {
+    val hits = search(query, mode, k).collect()
+    val tombstones = index.tombstoneIds
+    val ids = hits.map(_.getLong(0))
+      .filter(id => java.util.Arrays.binarySearch(tombstones, id) < 0)
+    val urls: Map[Long, String] =
+      if (ids.isEmpty) Map.empty
+      else urlProbe(ids.toSeq).collect().groupBy(_.getLong(0)).map { case (id, rows) =>
+        id -> rows.maxBy(r => (r.getLong(2), r.getInt(3)))(CompositeIndex.latestWins).getString(1)
+      }
+    val rows = hits.map(h =>
+      Row(h.getLong(0), h.getDouble(1), h.getInt(2), urls.getOrElse(h.getLong(0), null)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      Searcher.resultSchema.add("url", StringType))
+  }
 }

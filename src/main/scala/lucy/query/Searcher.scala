@@ -127,7 +127,7 @@ object Searcher {
   /** Default hard ceiling for tombstone-aware prefix over-expansion. */
   val defaultExpandCeiling: Int = 1 << 22
 
-  private val resultSchema = StructType(Seq(
+  private[query] val resultSchema = StructType(Seq(
     StructField("docId", LongType, nullable = false),
     StructField("score", DoubleType, nullable = false),
     StructField("nTerms", IntegerType, nullable = false)))

@@ -101,16 +101,28 @@ object IncrementalIndexer {
       .write.mode("overwrite").parquet(s"$rootDir/deletes/del-$next")
   }
 
-  /** All registered tombstones (complete generations only), sorted. */
+  /** All registered tombstones (complete generations only), sorted —
+    * the view's mask. The collect is bounded one past
+    * Deletes.maxTombstones, so a runaway delete log reaches
+    * TombstonedIndex's "compact first" check without pulling the whole
+    * log to the driver; compaction reads the log unbounded.
+    */
   def readTombstones(spark: SparkSession, rootDir: String): Array[Long] = {
-    val gens = deleteGens(spark, rootDir)
-      .filter(g => Manifest.stageDone(spark, s"$rootDir/deletes/del-$g"))
+    val gens = completeDeleteGens(spark, rootDir)
     if (gens.isEmpty) return Array.empty
-    gens.map(g => spark.read.parquet(s"$rootDir/deletes/del-$g"))
-      .reduce(_ unionByName _)
-      .select("docId").distinct()
+    tombstoneLog(spark, rootDir, gens).distinct()
+      .limit(Deletes.maxTombstones + 1)
       .collect().map(_.getLong(0)).sorted
   }
+
+  private def tombstoneLog(spark: SparkSession, rootDir: String, gens: Seq[Long]): DataFrame =
+    gens.map(g => spark.read.parquet(s"$rootDir/deletes/del-$g"))
+      .reduce(_ unionByName _)
+      .select("docId")
+
+  private def completeDeleteGens(spark: SparkSession, rootDir: String): Seq[Long] =
+    deleteGens(spark, rootDir)
+      .filter(g => Manifest.stageDone(spark, s"$rootDir/deletes/del-$g"))
 
   private def deleteGens(spark: SparkSession, rootDir: String): Seq[Long] = {
     val dir = new Path(s"$rootDir/deletes")
@@ -145,9 +157,7 @@ object IncrementalIndexer {
     // tombstones registered up to now are purged by this compaction:
     // their docs drop out of winners (and thus postings), and the log
     // generations read here are cleared after the pointer commits
-    val purgeGens = deleteGens(spark, rootDir)
-      .filter(g => Manifest.stageDone(spark, s"$rootDir/deletes/del-$g"))
-    val tombstones = readTombstones(spark, rootDir)
+    val purgeGens = completeDeleteGens(spark, rootDir)
 
     val tagged = parts.zipWithIndex.map { case (p, i) =>
       p.docmap(spark).withColumn("srcIdx", lit(i))
@@ -164,9 +174,8 @@ object IncrementalIndexer {
     // groupBy runs once per compaction, not twice (unpersisted after
     // the new generation commits).
     val winners =
-      (if (tombstones.isEmpty) winnersAll
-       else winnersAll.join(
-         broadcast(tombstones.toSeq.toDF("docId")), Seq("docId"), "left_anti"))
+      (if (purgeGens.isEmpty) winnersAll
+       else winnersAll.join(tombstoneLog(spark, rootDir, purgeGens), Seq("docId"), "left_anti"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val postings = parts.zipWithIndex.map { case (p, i) =>

@@ -138,4 +138,23 @@ class LucyStoreSpec extends SparkFunSuite {
     assert(rows.nonEmpty)
     store.close()
   }
+
+  test("searchWithUrls keeps its schema when a query has no hits") {
+    import org.apache.spark.sql.types.StringType
+    val root = Files.createTempDirectory("lucy-store-empty").toString + "/store"
+    val store = new LucyStore(spark, root)
+    store.bootstrap(PagesGen.pages(spark, 100))
+    val hit = store.searchWithUrls("spark", QueryMode.Or, 5)
+    assert(hit.collect().nonEmpty)
+    for ((q, m) <- Seq(("the and of", QueryMode.And), ("spark zzznotfound", QueryMode.And))) {
+      val none = store.searchWithUrls(q, m, 10)
+      assert(none.collect().isEmpty, s"[$q/$m]")
+      assert(none.schema("url").dataType === StringType, s"[$q/$m]")
+      assert(none.schema === hit.schema, s"[$q/$m]")
+      // the oracle join types its empty url column the same way
+      val oracle = NaiveSearch.withUrls(store.search(q, m, 10), store.view.docmap(spark))
+      assert(oracle.schema("url").dataType === StringType, s"[$q/$m] oracle")
+    }
+    store.close()
+  }
 }

@@ -213,6 +213,17 @@ class IncrementalSpec extends SparkFunSuite {
     cleaned.unpersist()
   }
 
+  test("a tombstone log past maxTombstones fails the view loudly; compaction clears it") {
+    val root = s"$tmp/runaway-deletes"
+    IncrementalIndexer.bootstrap(PagesGen.pages(spark, 50), root)
+    IncrementalIndexer.deleteUrls(spark, root,
+      (0L to Deletes.maxTombstones.toLong).map(i => s"https://example.org/gone/$i"))
+    val e = intercept[IllegalArgumentException](IncrementalIndexer.composite(spark, root))
+    assert(e.getMessage.contains("compact first"), e.getMessage)
+    IncrementalIndexer.compact(spark, root)
+    assert(!IncrementalIndexer.composite(spark, root).isInstanceOf[TombstonedIndex])
+  }
+
   test("ST4: replaying upstream across batches does not double-count df/cf") {
     import spark.implicits._
     val root = s"$tmp/st4"
